@@ -52,24 +52,18 @@ def _money(rng, lo: float, hi: float, n: int) -> np.ndarray:
 
 
 def _documents(rng, n_docs: int) -> dict:
-    """Random texts over a small vocabulary, with planted near duplicates
-    (an earlier text plus a ' dup' suffix, 5%) and a few exact duplicates
-    under another language/source, so every dedup stage has work."""
-    texts: list[str] = []
-    for i in range(n_docs):
-        r = rng.random()
-        if i > 10 and r < 0.05:
-            texts.append(texts[int(rng.integers(0, i))] + " dup")
-        elif i > 10 and r < 0.052:
-            texts.append(texts[int(rng.integers(0, i))])
-        else:
-            words = rng.choice(VOCAB, int(rng.integers(10, 101)))
-            texts.append(" ".join(words))
+    """Random texts of 10-99 words over a small vocabulary; then 5% of the
+    documents, picked at random, are replaced by another document's text
+    plus ' dup' (two picks of the same text make exact duplicates), so
+    every dedup stage has work. Sources are assigned round robin."""
+    texts = [" ".join(rng.choice(VOCAB, int(rng.integers(10, 100)))) for _ in range(n_docs)]
+    for i in rng.choice(n_docs, n_docs // 20, replace=False):
+        texts[i] = texts[int(rng.integers(0, n_docs))] + " dup"
     return {
         "doc_id": np.arange(n_docs, dtype=np.int64),
         "text": texts,
         "lang": rng.choice(LANGS, n_docs, p=LANG_P),
-        "source": np.array([f"src{k}" for k in rng.integers(0, 20, n_docs)]),
+        "source": np.array([f"src{i % 20}" for i in range(n_docs)]),
         "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
     }
 

@@ -18,7 +18,8 @@ All run state (fixtures, warehouses, checkpoints, Spark local dirs, temp
 files) lives in a fresh directory under the checkout that is removed on
 exit. The exit code is non-zero when any operation failed or any output
 differs from its oracle. `--smoke` runs one operation on sf0.01 fixtures
-without warm-up, for the benchmark's own tests.
+without warm-up, for the benchmark's own tests; `--fixtures DIR` reads an
+existing fixture set instead of generating one.
 """
 
 from __future__ import annotations
@@ -39,7 +40,6 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPEC = os.path.join(ROOT, "BENCHMARK.json")
 SF = 0.1
 SMOKE_SF = 0.01
-DRIVER_MEM = "3g"
 
 
 def _configure(run_dir: str, cores: int) -> None:
@@ -52,7 +52,6 @@ def _configure(run_dir: str, cores: int) -> None:
         "TMPDIR": tmp,
         "SPARK_LOCAL_DIRS": os.path.join(run_dir, "spark-local"),
         "SPARK_GRAFT_CPUS": str(cores),
-        "SPARK_GRAFT_DRIVER_MEM": DRIVER_MEM,
         "SPARK_GRAFT_WAREHOUSE": os.path.join(run_dir, "spark-warehouse"),
         "SPARK_GRAFT_STREAM_TMP": tmp,
         "PYSPARK_SUBMIT_ARGS": f"--driver-java-options {shlex.quote(java_opts)} pyspark-shell",
@@ -122,9 +121,10 @@ def run(args) -> dict:
     import datagen
 
     t = time.perf_counter()
-    datagen.generate(os.path.join(work, "fixtures"), args.seed, SMOKE_SF if args.smoke else SF)
+    sf_dir = args.fixtures or os.path.join(work, "fixtures")
+    if not args.fixtures:
+        datagen.generate(sf_dir, args.seed, SMOKE_SF if args.smoke else SF)
     datagen_s = time.perf_counter() - t
-    sf_dir = os.path.join(work, "fixtures")
 
     from etl_gamma_spark import registry
     from etl_gamma_spark.session import get_spark
@@ -160,9 +160,9 @@ def run(args) -> dict:
             "op_p50_ms": (statistics.median(lat) * 1e3, "ms"),
             "op_p95_ms": (workloads.percentile(lat, 0.95) * 1e3, "ms"),
             "ops_per_s": (len(lat) / wl.loop_wall, "1/s"),
-            "peak_rss_mb": (_vm_hwm_mb(spark._jvm.java.lang.ProcessHandle.current().pid()), "MB"),
         }
         layers = {
+            "peak_rss_mb": (_vm_hwm_mb(spark._jvm.java.lang.ProcessHandle.current().pid()), "MB"),
             "session.start_s": (t1 - t0, "s"),
             "model.register_s": (t2 - t1, "s"),
         }
@@ -179,6 +179,7 @@ def run(args) -> dict:
             "python": platform.python_version(),
             "seed": args.seed,
             "sf": SMOKE_SF if args.smoke else SF,
+            "fixtures": args.fixtures or "generated",
             "datagen_s": datagen_s,
             "check_s": check_s,
             "housekeeping_s": wl.housekeeping_s,
@@ -209,6 +210,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--smoke", action="store_true")
+    ap.add_argument("--fixtures", help="read this fixture directory instead of generating "
+                    "one (for calibration; see README.md)")
     args = ap.parse_args(argv)
 
     if not os.path.isfile(os.path.join(ROOT, "etl_gamma_spark", "__init__.py")):
@@ -224,6 +227,8 @@ def main(argv: list[str] | None = None) -> int:
     run_dir = tempfile.mkdtemp(prefix=".perfbench-run-", dir=ROOT)
     try:
         _configure(run_dir, len(os.sched_getaffinity(0)))
+        if args.fixtures:
+            args.fixtures = os.path.abspath(args.fixtures)
         os.chdir(run_dir)
         summary = run(args)
     finally:
